@@ -74,8 +74,9 @@ SPDF_MAGIC = b"%SPDF1\n"
 
 # --- scale knobs
 DEFAULT_SHUFFLE_PARTITIONS = 32
-# Arrow batch size for the extraction UDFs.  Round-1 used 64 (straggler
-# control); with task granularity now coming from fine-grained corpus
+# Arrow batch size for every Python operator, input and output
+# (operators/arrow_rows.py cuts output batches at it).  Round-1 used 64
+# (straggler control); with task granularity now coming from fine-grained corpus
 # files (~8 scan tasks/core), bigger batches cut JVM<->Python handoffs:
 # measured pinned A/B at 48k docs — 4 cores 967->1214 docs/s,
 # 16 cores 3178->3244 docs/s going 64->2048.

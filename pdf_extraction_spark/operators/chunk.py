@@ -2,38 +2,45 @@
 chunk_text) rows (the north_star RAG-chunking stage).
 
 Re-expresses the reference's RecursiveCharacterTextSplitter usage
-(build_vector_db.py:369-373,399-403) as exact substring spans.  Span
-computation is a vectorized pandas UDF returning an array of structs;
-the substring materialization stays JVM-side so chunk bytes never
-round-trip through Python — and the invariant
-``chunk_text == substring(extracted_text, start+1, end-start)`` is
-enforced by construction.
+(build_vector_db.py:369-373,399-403) as exact substring spans.  One
+Arrow pass (operators/arrow_rows.py) computes each text's spans with
+``text_pure.chunk_spans`` and emits the chunk rows directly, slicing
+``text[start:end]`` in Python: no span array, no explode, and the full
+text is not carried through every chunk row.  Python slices and Spark's
+``substring`` both index code points, so
+``chunk_text == substring(text, start+1, end-start)`` holds (tested).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..functions.text_pure import chunk_spans
+from .arrow_rows import map_rows
 
-SPAN = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("start", T.IntegerType(), False),
-            T.StructField("end", T.IntegerType(), False),
+
+def _split(df: DataFrame, keys: list[str], text_col: str) -> DataFrame:
+    """keys + text -> keys + (chunk_id, span_start, span_end, chunk_text),
+    one row per span of ``text_col``; chunk_id is the span's position."""
+    schema = T.StructType(
+        [df.schema[k] for k in keys]
+        + [
+            T.StructField("chunk_id", T.LongType(), False),
+            T.StructField("span_start", T.IntegerType()),
+            T.StructField("span_end", T.IntegerType()),
+            T.StructField("chunk_text", T.StringType()),
         ]
     )
-)
 
+    def fn(rows):
+        for r in rows:
+            text = r[text_col] or ""
+            for i, (s, e) in enumerate(chunk_spans(text)):
+                out = {k: r[k] for k in keys}
+                out.update(chunk_id=i, span_start=s, span_end=e, chunk_text=text[s:e])
+                yield out
 
-@F.pandas_udf(SPAN)
-def _spans_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(
-        lambda t: [
-            {"start": s, "end": e} for s, e in chunk_spans(t or "")
-        ]
-    )
+    return map_rows(df.select(*keys, text_col), fn, schema)
 
 
 def assemble_documents(page_text: DataFrame) -> DataFrame:
@@ -56,18 +63,8 @@ def assemble_documents(page_text: DataFrame) -> DataFrame:
 
 def chunk_stage(documents: DataFrame) -> DataFrame:
     """(url, extracted_text) -> chunk rows."""
-    spans = documents.select(
-        "url",
-        "extracted_text",
-        F.explode(_spans_udf(F.col("extracted_text"))).alias("span"),
-    )
-    return spans.select(
-        "url",
-        F.col("span.start").alias("span_start"),
-        F.col("span.end").alias("span_end"),
-        F.expr(
-            "substring(extracted_text, span.start + 1, span.end - span.start)"
-        ).alias("chunk_text"),
+    return _split(documents, ["url"], "extracted_text").select(
+        "url", "span_start", "span_end", "chunk_text"
     )
 
 
@@ -77,31 +74,24 @@ def typed_chunk_stage(page_text: DataFrame, pages: DataFrame) -> DataFrame:
     metadata at :354-366):
 
     * page_text — the separator-aware splitter over each page's
-      stripped text (posexplode keeps the span index as chunk_id);
+      stripped text (chunk_id is the span's position);
     * table     — title + row-major cell text per detected table;
     * figure    — caption + description per detected figure.
 
     -> (url, page_no, chunk_id, source_type, chunk_text).  chunk_id is
     unique within (url, page_no, source_type); region chunks offset by
     region_index.  Table/figure text is pure Catalyst over the nested
-    page structs (no Python, no shuffle); only the page splitter uses
-    the pandas UDF, same as chunk_stage.
+    page structs (no Python, no shuffle); only the page splitter runs
+    Python, the same Arrow pass as chunk_stage.
     """
-    pg = (
-        page_text.filter(F.length(F.coalesce("page_text", F.lit(""))) > 0)
-        .select(
-            "url", "page_no", "page_text",
-            F.posexplode(_spans_udf(F.col("page_text"))).alias("pos", "span"),
-        )
-        .select(
-            "url",
-            "page_no",
-            F.col("pos").cast("long").alias("chunk_id"),
-            F.lit("page_text").alias("source_type"),
-            F.expr(
-                "substring(page_text, span.start + 1, span.end - span.start)"
-            ).alias("chunk_text"),
-        )
+    pg = _split(
+        page_text.filter(F.length(F.coalesce("page_text", F.lit(""))) > 0),
+        ["url", "page_no"],
+        "page_text",
+    ).select(
+        "url", "page_no", "chunk_id",
+        F.lit("page_text").alias("source_type"),
+        "chunk_text",
     )
     body = pages.filter(F.col("page_no") > 0)
     tables = (

@@ -14,12 +14,10 @@ giant-PDF skew"), with the page split done entirely JVM-side:
   structured_extract.py:140-154, justifies page-level parallelism).
 * **repartition** on ``xxhash64(url, page_no)`` — page units spread
   uniformly across the cluster regardless of document size.
-* **layout (mapInArrow)** — the heavy glyph->line->block analysis per
-  page unit (operators/layout.py), vectorized numpy inside Arrow
-  batches.  This is the only Python stage in the extraction path.
-  Arrow-native in AND out: inputs are read straight off the record
-  batch and outputs build with RecordBatch.from_pylist, skipping the
-  pandas materialization mapInPandas pays in both directions.
+* **layout (mapInArrow, operators/arrow_rows.py)** — the heavy
+  glyph->line->block analysis per page unit (operators/layout.py),
+  vectorized numpy inside Arrow batches.  This is the only Python
+  stage in the extraction path.
 
 Each output row carries (partition_id, bytes_in, wall_ms) so the
 pipeline aggregates the per-partition lineage/metrics table
@@ -34,6 +32,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..constants import SPDF_MAGIC
 from ..schemas import PAGES
+from .arrow_rows import map_rows
 
 PAGES_EXT = T.StructType(
     PAGES.fields
@@ -157,95 +156,62 @@ def _empty_doc_row(url: str, host: str) -> dict:
     }
 
 
-def _arrow_out_schema():
-    """PAGES_EXT as a pyarrow schema (cached): mapInArrow batches are
-    built directly with pa.RecordBatch.from_pylist — the nested
-    blocks/tables/figures structs convert in C++ instead of taking the
-    pandas object-column detour both mapInPandas directions pay."""
-    global _ARROW_SCHEMA
-    if _ARROW_SCHEMA is None:
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        _ARROW_SCHEMA = to_arrow_schema(PAGES_EXT)
-    return _ARROW_SCHEMA
-
-
-_ARROW_SCHEMA = None
-
-
-def _emit_batches(batches, pid, t0):
-    import pyarrow as pa
-
-    schema = _arrow_out_schema()
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    for rows in batches:
-        for row in rows:
-            row["partition_id"] = pid
-            row["wall_ms"] = wall_ms
-        yield pa.RecordBatch.from_pylist(rows, schema=schema)
-
-
-def _layout_fn(it):
-    """Page-unit layout (big-doc path), Arrow-native (mapInArrow)."""
-    from pyspark import TaskContext
-
+def _layout_units(rows):
+    """Page-unit layout (big-doc path): one unit row -> one page row."""
     from .layout import extract_html_unit, extract_spdf_unit
 
-    pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-    t0 = time.monotonic()
-    batches = []
-    for rb in it:
-        rows = []
-        cols = [rb.column(rb.schema.get_field_index(n)).to_pylist()
-                for n in ("url", "host", "page_no", "kind", "payload",
-                          "bytes_in", "content_hash")]
-        for url, host, page_no, kind, payload, bytes_in, chash in zip(*cols):
-            if kind == "spdf":
-                row = _page_to_row(extract_spdf_unit(payload, int(page_no)), url, host)
-            elif kind == "html":
-                row = _page_to_row(extract_html_unit(payload), url, host)
-            else:
-                row = _empty_doc_row(url, host)
-            row["bytes_in"] = int(bytes_in)
-            row["content_hash"] = chash
-            rows.append(row)
-        if rows:
-            batches.append(rows)
-    yield from _emit_batches(batches, pid, t0)
+    for r in rows:
+        url, host, kind = r["url"], r["host"], r["kind"]
+        if kind == "spdf":
+            row = _page_to_row(extract_spdf_unit(r["payload"], int(r["page_no"])), url, host)
+        elif kind == "html":
+            row = _page_to_row(extract_html_unit(r["payload"]), url, host)
+        else:
+            row = _empty_doc_row(url, host)
+        row["bytes_in"] = int(r["bytes_in"])
+        row["content_hash"] = r["content_hash"]
+        yield row
 
 
-def _layout_docs_fn(it):
+def _layout_docs(rows):
     """Whole-document layout for the small-doc path (no page shuffle):
-    one input row -> N page rows.  Arrow-native (mapInArrow)."""
-    from pyspark import TaskContext
-
+    one input row -> N page rows."""
     from .layout import extract_payload
 
-    pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-    t0 = time.monotonic()
-    batches = []
-    for rb in it:
-        rows = []
-        cols = [rb.column(rb.schema.get_field_index(n)).to_pylist()
-                for n in ("url", "host", "html", "content_hash")]
-        for url, host, payload, chash in zip(*cols):
-            raw = payload if payload is not None else b""
-            pages = extract_payload(raw)
-            if not pages:
-                row = _empty_doc_row(url, host)
-                row["bytes_in"] = len(raw)
-                row["content_hash"] = chash
-                rows.append(row)
-                continue
-            per_page_bytes = len(raw) // max(1, len(pages))
-            for page in pages:
-                row = _page_to_row(page, url, host)
-                row["bytes_in"] = per_page_bytes
-                row["content_hash"] = chash
-                rows.append(row)
-        if rows:
-            batches.append(rows)
-    yield from _emit_batches(batches, pid, t0)
+    for r in rows:
+        raw = r["html"] if r["html"] is not None else b""
+        pages = extract_payload(raw)
+        if not pages:
+            row = _empty_doc_row(r["url"], r["host"])
+            row["bytes_in"] = len(raw)
+            row["content_hash"] = r["content_hash"]
+            yield row
+            continue
+        per_page_bytes = len(raw) // max(1, len(pages))
+        for page in pages:
+            row = _page_to_row(page, r["url"], r["host"])
+            row["bytes_in"] = per_page_bytes
+            row["content_hash"] = r["content_hash"]
+            yield row
+
+
+def _with_lineage(layout):
+    """Stamps each page row with its partition_id and the task's layout
+    wall time so far: the metrics table keeps max(wall_ms) per
+    partition, i.e. the partition's whole layout time."""
+    started: dict[int, float] = {}
+
+    def fn(rows):
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        t0 = started.setdefault(ctx.taskAttemptId(), time.monotonic())
+        for row in layout(rows):
+            row["partition_id"] = ctx.partitionId()
+            row["wall_ms"] = int((time.monotonic() - t0) * 1000)
+            yield row
+
+    return fn
 
 
 def extract_stage(input_df: DataFrame, n_partitions: int | None = None) -> DataFrame:
@@ -269,13 +235,13 @@ def extract_stage(input_df: DataFrame, n_partitions: int | None = None) -> DataF
     # no shuffle on the small path: parallelism comes from the input
     # splits (spark.sql.files.maxPartitionBytes is sized down in
     # session.py so scan partitions are fine-grained)
-    small = (
-        base.filter(F.col("_nbytes") <= SPLIT_BYTES_THRESHOLD)
-        .select(
+    small = map_rows(
+        base.filter(F.col("_nbytes") <= SPLIT_BYTES_THRESHOLD).select(
             "url", "host", "html",
             F.md5(F.coalesce("html", F.lit(b""))).alias("content_hash"),
-        )
-        .mapInArrow(_layout_docs_fn, PAGES_EXT)
+        ),
+        _with_lineage(_layout_docs),
+        PAGES_EXT,
     )
     # Scatter on xxhash64(url, page_no) WITHOUT a pinned partition
     # count: the round-5 form pinned defaultParallelism*16 (512 tasks on
@@ -293,5 +259,5 @@ def extract_stage(input_df: DataFrame, n_partitions: int | None = None) -> DataF
         big_units = big_units.repartition(n_partitions, F.xxhash64("url", "page_no"))
     else:
         big_units = big_units.repartition(F.xxhash64("url", "page_no"))
-    big = big_units.mapInArrow(_layout_fn, PAGES_EXT)
+    big = map_rows(big_units, _with_lineage(_layout_units), PAGES_EXT)
     return small.unionByName(big)

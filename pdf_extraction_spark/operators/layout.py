@@ -6,7 +6,7 @@ Replaces the reference's Docling conversion (structured_extract.py:
 order.  Glyph expansion, line grouping and word-gap detection are
 numpy-vectorized (thousands of glyphs/page); element-level recursion
 (tens of blocks/tables/figures) stays plain Python.  Runs inside the
-Stage-1 ``mapInPandas`` over Arrow batches (operators/extract.py).
+Stage-1 ``mapInArrow`` pass over Arrow batches (operators/extract.py).
 """
 
 from __future__ import annotations

@@ -62,9 +62,12 @@ def _tf_col(term: str, text_col: str) -> Column:
     """Occurrences of ``term`` as a whitespace token of ``text_col``,
     with ZERO array materialization: a token equals a maximal run of
     non-space characters (the tokenizer is split-on-' ' minus empties),
-    so tf = regexp_count of the literal term bounded by ' '/^/$
-    (zero-width lookarounds, so adjacent occurrences all count).
-    Value-identical to counting split-tokens == term.  The former
+    so tf = regexp_count of the literal term bounded by ' ' or the
+    absolute text edges \\A/\\z (zero-width lookarounds, so adjacent
+    occurrences all count).  ``$`` would also match before a final line
+    terminator, counting "term\\n" as the token "term" where the
+    split-on-' ' tokenizer sees "term\\n"; with \\A/\\z the count equals
+    the number of split-tokens == term.  The former
     array form (size(tokens) - size(array_remove(tokens, term)))
     allocated the token array per tf column and collapsed under
     memory-bandwidth contention — the same pathology measured for
@@ -72,7 +75,7 @@ def _tf_col(term: str, text_col: str) -> Column:
     cure.  A term containing a space can never be a token -> 0."""
     if not term or " " in term:
         return F.lit(0)
-    pat = "(?<=^| )" + _regex_literal(term) + "(?= |$)"
+    pat = r"(?<=\A| )" + _regex_literal(term) + r"(?= |\z)"
     return F.regexp_count(F.col(text_col), F.lit(pat))
 
 
@@ -86,12 +89,9 @@ def _bm25_compact(
     docs: DataFrame, terms: list[str], id_col: str, extra: list[Column],
     text_col: str = "text",
 ) -> DataFrame:
-    """ONE text pass -> the 40-byte-per-doc proxy frame every BM25
-    consumer derives from: (id, doc_len, _tf<j> per query term, plus
-    caller extras), hash-repartitioned on id so the heavy tokenize runs
-    exactly once and every downstream branch (corpus stats, df counts,
-    scoring) hits a ReusedExchange instead of re-scanning the corpus
-    (guide §2.3: shuffle keys and metadata instead of payloads).
+    """ONE row-local text pass -> the 40-byte-per-doc proxy frame every
+    BM25 consumer derives from: (id, doc_len, _tf<j> per query term,
+    plus caller extras) — no token arrays, no exchange of its own.
 
     Input parallelism comes from the guard (a no-op when the caller's
     frame is already guarded/parallel).  Each consumer branch (stats
@@ -163,9 +163,9 @@ def bm25_scores(
     reference: search_vector_db.py:61-85.
 
     Round-6 shape (guide §2.3/§2.4): per-term tf computed row-locally
-    into a compact per-doc frame (one corpus scan instead of three —
-    the old corpus-stats / explode-terms / explode-distinct-df subplans
-    each re-tokenized the text); corpus stats AND df counts come from
+    into a compact per-doc frame (one regexp pass per branch, stats and
+    scoring, instead of three token-array subplans — corpus-stats /
+    explode-terms / explode-distinct-df); corpus stats AND df counts come from
     one tiny aggregate over that frame; the score is a row-local sum
     against the broadcast stats row.  Semantics identical: tf =
     occurrence count, df = docs containing the term, same idf/denom
@@ -179,12 +179,12 @@ def bm25_scores(
     stats = compact.agg(*_bm25_stats_aggs(terms))
     # The no-term filter is expressed on the POST-JOIN score column (null
     # when no term matched), NOT as a predicate on the tf columns: a
-    # pre-join filter gets pushed below the compact exchange, which both
-    # re-evaluates the tokenize on the (possibly single-task) scan side
-    # and breaks the ReusedExchange with the stats branch.  A condition
-    # referencing the broadcast stats row cannot be pushed below the
-    # join, so the exchange subtrees stay identical and the text pass
-    # runs once.
+    # pre-join tf filter is pushed through the projection and below the
+    # guard's round-robin exchange, so the regexp counts would run on
+    # the (possibly single-task) scan side and again above the exchange.
+    # A condition referencing the broadcast stats row cannot be pushed
+    # below the join, so the scoring branch counts each term once, after
+    # the rebalance.
     score = F.when(
         _any_tf(terms), _bm25_score_col(terms, k1, b)
     ).otherwise(F.lit(None).cast("double"))

@@ -41,11 +41,9 @@ def fits_broadcast(df: DataFrame) -> bool:
     (file listing is already cached by the scan); no extra Spark job."""
     import os
 
-    spark = df.sparkSession
-    try:
-        thr = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except (TypeError, ValueError):
-        return False
+    # the planner's own parsed value: the conf string may carry a unit
+    # ("10485760b" on a default session, "64MB") or be negative
+    thr = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     if thr <= 0:
         return False
     try:

@@ -84,6 +84,9 @@ def test_bm25_matches_pure_spec(spark):
         (1, "table scan filter"),
         (2, "join join spark window"),
         (3, "other words entirely"),
+        # a trailing line terminator is part of the last ' '-token
+        (4, "table join\n"),
+        (5, "spark join\r\n"),
     ]
     df = spark.createDataFrame(texts, "doc_id long, text string")
     got = {
@@ -92,7 +95,7 @@ def test_bm25_matches_pure_spec(spark):
             retrieval.with_tokens(df), ["spark", "join"]
         ).collect()
     }
-    corpus = [t.split() for _, t in texts]
+    corpus = [[w for w in t.split(" ") if w] for _, t in texts]
     n = len(corpus)
     avgdl = sum(map(len, corpus)) / n
     for doc_id, toks in enumerate(corpus):

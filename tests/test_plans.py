@@ -53,15 +53,52 @@ def test_topk_plans_take_ordered(spark, sf):
     assert "TakeOrderedAndProject" in plan  # partial top-k per partition
 
 
+PYTHON_NODES = ("PythonUDF", "ArrowEvalPython", "BatchEvalPython",
+                "MapInPandas", "MapInArrow")
+
+
 def test_boilerplate_stage_has_no_python(spark, sf):
-    """north_rule: no per-row Python outside the layout/OCR/chunk UDFs —
-    the whole boilerplate path must be Catalyst expressions."""
+    """north_rule: no per-row Python outside the layout/OCR/chunk
+    operators — the whole boilerplate path must be Catalyst expressions."""
     from pdf_extraction_spark.schemas import PAGES
 
     pages = spark.createDataFrame([], PAGES)
     for df in (boilerplate_patterns(pages), strip_stage(pages)):
         plan = optimized_of(df)
-        assert "PythonUDF" not in plan and "MapInPandas" not in plan
+        assert [n for n in PYTHON_NODES if n in plan] == []
+
+
+def test_chunk_stages_cross_into_python_once(spark):
+    """chunk_stage and typed_chunk_stage each run ONE mapInArrow pass
+    (spans and chunk text from one kernel) and no pandas-UDF node."""
+    from pdf_extraction_spark.operators.chunk import chunk_stage, typed_chunk_stage
+    from pdf_extraction_spark.schemas import DOC_TEXT, PAGE_TEXT, PAGES
+
+    docs = spark.createDataFrame([], DOC_TEXT)
+    page_text = spark.createDataFrame([], PAGE_TEXT)
+    pages = spark.createDataFrame([], PAGES)
+    for df in (chunk_stage(docs), typed_chunk_stage(page_text, pages)):
+        plan = optimized_of(df)
+        assert "ArrowEvalPython" not in plan and "PythonUDF" not in plan
+        assert plan.count("MapInArrow") == 1
+
+
+@pytest.mark.parametrize("threshold", ["10485760b", "64MB"])
+def test_fits_broadcast_parses_unit_thresholds(spark, sf, threshold):
+    """The threshold conf may carry a unit (a default session reports
+    '10485760b'); a small table must still fit, and -1 disables."""
+    from pdf_extraction_spark.queries.common import fits_broadcast
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        nation = spark.read.parquet(f"{sf}/nation.parquet")
+        spark.conf.set(key, threshold)
+        assert fits_broadcast(nation)
+        spark.conf.set(key, "-1")
+        assert not fits_broadcast(nation)
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_partial_aggregation_pushed(spark, sf):

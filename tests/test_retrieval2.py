@@ -4,39 +4,21 @@ embedding build, query-filter inference."""
 from pyspark.sql import functions as F
 
 from pdf_extraction_spark.operators import retrieval
-from pdf_extraction_spark.operators.embed import (
-    EMBED_DIM,
-    embed_stage,
-    hash_embedding_col,
-)
+from pdf_extraction_spark.operators.embed import EMBED_DIM, embed_stage
 from pdf_extraction_spark.queries.retrieval2 import synthetic_chunks
-
-
-def test_embed_catalyst_and_arrow_paths_identical(spark):
-    """The mapInPandas encoder path (the production shape for a real
-    model) must match the Catalyst expression bit-for-bit."""
-    docs = spark.createDataFrame(
-        [(i, f"doc {i} text with words {i * 7}") for i in range(20)] + [(99, "")],
-        "doc_id long, chunk_text string",
-    )
-    a = {r.doc_id: r.embedding for r in embed_stage(docs).collect()}
-    b = {r.doc_id: r.embedding for r in embed_stage(docs, use_arrow=True).collect()}
-    assert a.keys() == b.keys()
-    for k in a:
-        assert len(a[k]) == EMBED_DIM
-        assert a[k] == b[k]
-        assert all(-1.0 <= x <= 1.0 for x in a[k])
 
 
 def test_embed_is_deterministic_and_content_sensitive(spark):
     docs = spark.createDataFrame(
-        [(0, "alpha beta"), (1, "alpha beta"), (2, "alpha gamma")],
+        [(0, "alpha beta"), (1, "alpha beta"), (2, "alpha gamma"), (3, "")],
         "doc_id long, t string",
     )
-    rows = docs.select("doc_id", hash_embedding_col("t").alias("e")).collect()
-    e = {r.doc_id: r.e for r in rows}
+    e = {r.doc_id: r.embedding for r in embed_stage(docs, text_col="t").collect()}
     assert e[0] == e[1]
     assert e[0] != e[2]
+    for v in e.values():
+        assert len(v) == EMBED_DIM
+        assert all(-1.0 <= x <= 1.0 for x in v)
 
 
 def test_chunk_hybrid_dedup_one_row_per_doc_page(spark):

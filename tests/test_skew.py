@@ -38,7 +38,7 @@ def test_small_docs_single_python_stage(spark):
         inp = spark.read.parquet(f"{d}/c")
         plan = extract_stage(inp)._jdf.queryExecution().executedPlan().toString()
     # exactly one exchange: the big-doc scatter; the small branch reads
-    # scan -> filter -> project -> mapInPandas with no shuffle
+    # scan -> filter -> project -> mapInArrow with no shuffle
     assert plan.count("Exchange") == 1
 
 
